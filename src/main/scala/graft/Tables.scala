@@ -24,19 +24,25 @@ object Tables {
     * `-Dgraft.tableCache=off` restores the per-call read (A/B, and any
     * caller that rewrites a dir mid-session).
     */
-  private val planMemo =
+  private[graft] val planMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (sys.props.get("graft.tableCache").contains("off"))
       loadFresh(spark, dir, name)
-    else
-      planMemo.computeIfAbsent((spark, dir, name), _ => {
+    else {
+      val key = (spark, dir, name)
+      val hit = planMemo.get(key)
+      if (hit != null) hit
+      else {
         // Evict dead sessions on the (rare) miss path so long-lived JVMs
         // that create and stop many sessions don't accumulate their plans.
+        // Outside computeIfAbsent: its mapping function must not modify
+        // the map.
         planMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        loadFresh(spark, dir, name)
-      })
+        planMemo.computeIfAbsent(key, _ => loadFresh(spark, dir, name))
+      }
+    }
 
   private def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else

@@ -774,10 +774,33 @@ object CurationFlagship {
   * updated windows re-merge, untouched rows survive).
   *
   * Scale shape: dedup state is bounded by the watermark; the dimension is
-  * a broadcast; window state is dropped past the watermark; the serving
-  * table rewrite is keyed (mergeUpsert's full-outer join on the serving
-  * key), so each micro-batch touches work proportional to ITS windows,
-  * not the table's history.
+  * a broadcast; window state is dropped past the watermark. The serving
+  * table is NOT maintained in place: each micro-batch reads the whole
+  * table, full-outer-joins it with the batch's changed windows on the
+  * serving key (mergeUpsert) and rewrites all of it, so one batch costs
+  * work proportional to the table's history plus its own windows.
+  *
+  * One micro-batch per refresh: a refresh that finds new input runs
+  * exactly one (data) micro-batch, and one that finds none runs zero. The
+  * query starts with `spark.sql.streaming.noDataMicroBatches.enabled`
+  * off, so Spark does not follow the data batch with the no-data batch
+  * that only advances the watermark and evicts state. In `update` mode
+  * that batch hands foreachBatch an empty frame — evicting expired
+  * window or dedup state emits no rows — so it would only re-read and
+  * re-write the unchanged table. Skipping it shifts two things by one
+  * refresh, and neither loses a row:
+  *  - eviction: the watermark a data batch reaches is recorded in the
+  *    offset log, and the next refresh's data batch evicts with it, as
+  *    the no-data batch would have. Expired window and dedup state is
+  *    held one refresh longer.
+  *  - late rows: Spark drops a row as late against the watermark the
+  *    PREVIOUS batch evicted with. Without the no-data batch in between,
+  *    that is the watermark the previous refresh started with, not the
+  *    one it reached. A row between the two is counted; with no-data
+  *    batches on it would be dropped. Its window's state is still held
+  *    (eviction lags by the same refresh), so the row updates the window
+  *    and never reopens an evicted one. The table only moves toward the
+  *    batch oracle, which drops no late rows at all.
   */
 object StreamingServing {
   import graft.streaming.Streams
@@ -807,29 +830,45 @@ object StreamingServing {
       Streams.enrichStream(
         Streams.dedupStream(events, "event_id"),
         dim, "user_id"))
-    val q = rollup.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.api._
-        val changes = batch.withColumn("k",
-          concat_ws("|", col("hour").cast("string"), col("segment")))
-        val base =
-          if (graft.sources.DatasetFs.exists(spark, s"parquet://$servingPath"))
-            spark.read.parquet(servingPath)
-          else changes.limit(0)
-        // Rewrite via temp dir + atomic swap: the merge job reads the
-        // current table and writes somewhere ELSE, so a lost cached block
-        // can always recompute from intact inputs; only after the write
-        // succeeds does swapInto replace servingPath by rename.
-        val tmp = s"$servingPath.tmp-$batchId"
-        base.mergeUpsert(changes, "k").write.mode("overwrite").parquet(tmp)
-        graft.sources.DatasetFs.swapInto(spark, tmp, servingPath)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    // One micro-batch per refresh (see the object doc). The stream clones
+    // this session on its own thread after start() returns, so the
+    // caller's setting comes back only once the query has terminated.
+    // getAll holds only explicitly set keys: an unset key stays unset.
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getAll.get(noData)
+    spark.conf.set(noData, "false")
+    try
+      rollup.writeStream
+        .outputMode("update")
+        .option("checkpointLocation", checkpointDir)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          import graft.api._
+          val changes = batch.withColumn("k",
+            concat_ws("|", col("hour").cast("string"), col("segment")))
+          // The table holds exactly the columns of `changes` (it is only
+          // ever written below, and mergeUpsert requires equal schemas), so
+          // the read takes that schema instead of launching a job to infer
+          // it from the parquet footers.
+          val base =
+            if (graft.sources.DatasetFs.exists(spark, s"parquet://$servingPath"))
+              spark.read.schema(changes.schema).parquet(servingPath)
+            else changes.limit(0)
+          // Rewrite via temp dir + atomic swap: the merge job reads the
+          // current table and writes somewhere ELSE, so a lost cached block
+          // can always recompute from intact inputs; only after the write
+          // succeeds does swapInto replace servingPath by rename.
+          val tmp = s"$servingPath.tmp-$batchId"
+          base.mergeUpsert(changes, "k").write.mode("overwrite").parquet(tmp)
+          graft.sources.DatasetFs.swapInto(spark, tmp, servingPath)
+          ()
+        }
+        .start()
+        .awaitTermination()
+    finally prev match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
+    }
   }
 
   /** The shared shape: batch oracle and stream run the SAME function.

@@ -16,6 +16,11 @@ import org.apache.spark.sql.types._
   * expression trees — no per-element lambda dispatch, no intermediate
   * arrays. Registered as SQL function `cosine_similarity` by
   * [[GraftExtensions]].
+  *
+  * NULL when either vector has a zero norm (all zeros, or empty): what the
+  * HOF formulation's division by zero gives with ANSI mode off, and
+  * try_divide gives with it on. Not Java's NaN, which would sort first in
+  * a descending top-k.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression with VectorBinaryChecks {
@@ -23,7 +28,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def prettyNameForCheck: String = "cosine_similarity"
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // mismatch/null-element → null
+  override def nullable: Boolean = true // mismatch/null-element/zero-norm → null
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -41,7 +46,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -59,6 +65,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
+      val denom = ctx.freshName("denom")
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
@@ -71,7 +78,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |    double $yv = ${rightGet(b, i)};
          |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
          |  }
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |  if ($denom == 0.0) ${ev.isNull} = true;
+         |  else ${ev.value} = $dot / $denom;
          |}
        """.stripMargin
     })

@@ -36,7 +36,9 @@ object Similarity {
     * use the codegen'd `cosine_similarity`/`dot_product` Expressions
     * (graft.functions), which accumulate in the same left-to-right order
     * and are bit-identical (the q213/q223 promotion, r6; q50/q52/q244
-    * were missed then and swapped in r14 — guide §4).
+    * were missed then and swapped in r14 — guide §4). On a zero-norm or
+    * empty vector the native cosine is NULL; this reference divides by
+    * zero, which is NULL with ANSI mode off and an error with it on.
     */
   private def dotExpr(a: String, b: String): String =
     s"""aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),

@@ -1735,17 +1735,19 @@ object TextAnalysis {
         // groupBy key instead of a second documents scan joined back —
         // the r13-verdict-flagged "5 documents scans across plan
         // sections" drop to 1 (both xf branches consume the same
-        // (doc_id, y, b) exchange via ReuseExchange; every doc has ≥ 1
-        // token — split of an empty text yields [""] — so the per-doc
-        // bias branch loses nobody). -Dgraft.ftFuse=off restores the
-        // tf ⋈ yd shape for A/B.
+        // (doc_id, y, b) exchange via ReuseExchange). The per-doc bias
+        // branch must lose nobody: split of an empty text yields [""],
+        // and explode_outer keeps a NULL-text doc as one NULL token,
+        // whose NULL bucket is filtered out with the zero-phi ones — bias
+        // row only, as in the oracle and the tf ⋈ yd shape.
+        // -Dgraft.ftFuse=off restores the tf ⋈ yd shape for A/B.
         val xf = (if (!sys.props.get("graft.ftFuse").contains("off")) {
           val base = docs(s, dir)
             .select(col("doc_id"),
               expr("CAST(CASE WHEN size(filter(split(text, ' '), " +
                 "w -> w IN ('spark', 'query', 'join'))) >= 3 " +
                 "THEN 1 ELSE -1 END AS BIGINT)").as("y"),
-              explode(split(col("text"), " ")).as("tok"))
+              explode_outer(split(col("text"), " ")).as("tok"))
             .select(col("doc_id"), col("y"),
               expr("CAST(conv(substring(md5(concat('fh:', tok)), 1, 6), 16, " +
                 "10) AS BIGINT) % 64").as("b"),
@@ -1754,7 +1756,7 @@ object TextAnalysis {
                 " ELSE CAST(-1 AS BIGINT) END").as("sg"))
           val grouped = base.groupBy("doc_id", "y", "b")
             .agg(sum(col("sg")).as("phi"))
-          grouped.filter(col("phi") =!= 0)
+          grouped.filter(col("b").isNotNull && col("phi") =!= 0)
             .select(col("doc_id"), col("b"), col("phi"), col("y"))
             .unionByName(grouped.select("doc_id", "y").distinct()
               .select(col("doc_id"), lit(64L).as("b"),

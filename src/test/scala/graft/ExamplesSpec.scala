@@ -352,7 +352,10 @@ class ExamplesSpec extends SparkSpec {
     assert(stats2 == stats)
   }
 
-  test("streaming serving pipeline: stream == batch, incremental across drops") {
+  /** A serving pipeline over its own work dir. The file stream watches a
+    * flat dir, so each drop's part file is moved there whole.
+    */
+  private class ServingFixture {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val work = tmp()
@@ -360,56 +363,157 @@ class ExamplesSpec extends SparkSpec {
     val serving = s"$work/serving"; val ckpt = s"$work/ckpt"
     val dim = Seq((1L, "gold"), (2L, "silver"), (3L, "gold"))
       .toDF("user_id", "segment")
-    def ev(rows: Seq[(Long, String, Long, String, Double)]) = rows
-      .toDF("event_id", "tss", "user_id", "event_type", "value")
-      .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
-        col("user_id"), col("event_type"), col("value"),
-        lit("{}").as("props"))
-    // the file stream watches a flat dir: land each drop's part files there
-    def drop(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
+
+    def drop(tag: String, rows: Seq[(Long, String, Long, String, Double)]): Unit = {
       val stage = s"$work/stage_$tag"
-      df.coalesce(1).write.parquet(stage)
+      rows.toDF("event_id", "tss", "user_id", "event_type", "value")
+        .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
+          col("user_id"), col("event_type"), col("value"),
+          lit("{}").as("props"))
+        .coalesce(1).write.parquet(stage)
       new java.io.File(stage).listFiles()
         .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
         .zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(s"$eventsDir/$tag-$i.parquet"))
+          Files.move(f.toPath, java.nio.file.Paths.get(s"$eventsDir/$tag-$i.parquet"))
         }
     }
+
+    def refresh(): Unit =
+      StreamingServing.refresh(spark, eventsDir, dim, serving, ckpt)
+
+    private def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("hour", "segment", "n_events", "value_sp")
+        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1),
+          r.getLong(2), r.getLong(3))).toSet
+
+    def table(): Set[(String, String, Long, Long)] = rows(spark.read.parquet(serving))
+
+    /** The same rollup over a plain read of every landed file. */
+    def batchOracle(): Set[(String, String, Long, Long)] =
+      rows(StreamingServing.hourlyRollup(
+        spark.read.parquet(eventsDir).dropDuplicates("event_id")
+          .join(broadcast(dim), Seq("user_id"), "left")))
+  }
+
+  test("streaming serving pipeline: stream == batch, incremental across drops") {
+    val f = new ServingFixture
     // drop 1: two hours of events, with an in-stream duplicate event_id
-    drop("d1", ev(Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5),
+    f.drop("d1", Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5),
       (1L, "2024-01-01 10:06:00", 1L, "view", 99.0), // dup: dropped
       (2L, "2024-01-01 10:20:00", 2L, "buy", 10.0),
-      (3L, "2024-01-01 11:10:00", 3L, "view", 2.0))))
-    StreamingServing.refresh(spark, eventsDir, dim, serving, ckpt)
-    def table() = spark.read.parquet(serving)
-      .select("hour", "segment", "n_events", "value_sp")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1),
-        r.getLong(2), r.getLong(3))).toSet
-    assert(table() == Set(
+      (3L, "2024-01-01 11:10:00", 3L, "view", 2.0)))
+    f.refresh()
+    assert(f.table() == Set(
       ("2024-01-01 10:00:00.0", "gold", 1L, 1500000L),
       ("2024-01-01 10:00:00.0", "silver", 1L, 10000000L),
       ("2024-01-01 11:00:00.0", "gold", 1L, 2000000L)))
     // drop 2: a NEW file lands — one more event in an EXISTING window and
     // one in a new window; refresh reprocesses only the new file and the
     // merge updates/extends exactly those keys
-    drop("d2", ev(Seq((4L, "2024-01-01 10:45:00", 3L, "view", 0.5),
-      (5L, "2024-01-01 12:00:00", 2L, "buy", 4.0))))
-    StreamingServing.refresh(spark, eventsDir, dim, serving, ckpt)
+    f.drop("d2", Seq((4L, "2024-01-01 10:45:00", 3L, "view", 0.5),
+      (5L, "2024-01-01 12:00:00", 2L, "buy", 4.0)))
+    f.refresh()
     val expected = Set(
       ("2024-01-01 10:00:00.0", "gold", 2L, 2000000L), // 1.5 + 0.5
       ("2024-01-01 10:00:00.0", "silver", 1L, 10000000L),
       ("2024-01-01 11:00:00.0", "gold", 1L, 2000000L),
       ("2024-01-01 12:00:00.0", "silver", 1L, 4000000L))
-    assert(table() == expected, s"got ${table()}")
+    assert(f.table() == expected, s"got ${f.table()}")
     // batch oracle: the same rollup over a plain read of all files equals
     // the incrementally-maintained serving table
-    val batch = StreamingServing.hourlyRollup(
-        spark.read.parquet(eventsDir).dropDuplicates("event_id")
-          .join(broadcast(dim), Seq("user_id"), "left"))
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1),
-        r.getLong(2), r.getLong(3))).toSet
-    assert(batch == expected, s"batch oracle got $batch")
+    assert(f.batchOracle() == expected, s"batch oracle got ${f.batchOracle()}")
+  }
+
+  test("streaming serving: one micro-batch per refresh, none without new files") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    // Listener events arrive asynchronously; a query's progress events
+    // are posted before its termination event, so once `terminated`
+    // grows, every progress event of that refresh has been seen. Only
+    // queries started under this listener count: a late event of an
+    // earlier spec's query must not.
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val progress = new java.util.concurrent.atomic.AtomicInteger()
+    val terminated = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.runId)) progress.incrementAndGet()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.runId)) terminated.incrementAndGet()
+    }
+    def batchesOf(refresh: => Unit): Int = {
+      val (p0, t0) = (progress.get, terminated.get)
+      refresh
+      val deadline = System.nanoTime() + 30000000000L
+      while (terminated.get == t0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(terminated.get == t0 + 1, "refresh query never reported termination")
+      progress.get - p0
+    }
+    val f = new ServingFixture
+    spark.streams.addListener(listener)
+    try {
+      f.drop("d1", Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5),
+        (2L, "2024-01-01 13:20:00", 2L, "buy", 10.0)))
+      assert(batchesOf(f.refresh()) == 1)
+      f.drop("d2", Seq((3L, "2024-01-01 15:00:00", 3L, "view", 2.0)))
+      assert(batchesOf(f.refresh()) == 1)
+      assert(batchesOf(f.refresh()) == 0)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("streaming serving restores the no-data-batch conf, also when a batch fails") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.getAll.get(key)
+    try {
+      spark.conf.unset(key)
+      val ok = new ServingFixture
+      ok.drop("d1", Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5)))
+      ok.refresh()
+      assert(!spark.conf.getAll.contains(key))
+      // A serving "table" that is not parquet: the batch's merge fails.
+      spark.conf.set(key, "true")
+      val bad = new ServingFixture
+      Files.writeString(java.nio.file.Paths.get(bad.serving), "not parquet")
+      bad.drop("d1", Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5)))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](bad.refresh())
+      assert(spark.conf.getAll.get(key).contains("true"))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("streaming serving == batch oracle over three drops, a re-send and an idle refresh") {
+    val f = new ServingFixture
+    f.drop("d1", Seq((1L, "2024-01-01 10:05:00", 1L, "view", 1.5),
+      (2L, "2024-01-01 10:20:00", 2L, "buy", 10.0),
+      (3L, "2024-01-01 11:10:00", 3L, "view", 2.0)))
+    f.refresh()
+    assert(f.table() == f.batchOracle())
+    // Event 2 is delivered again, well within the 2 h watermark: the
+    // dedup state still holds it, so it is not counted twice.
+    f.drop("d2", Seq((2L, "2024-01-01 10:20:00", 2L, "buy", 10.0),
+      (4L, "2024-01-01 10:45:00", 3L, "view", 0.5),
+      (5L, "2024-01-01 12:00:00", 2L, "buy", 4.0)))
+    f.refresh()
+    val afterD2 = f.table()
+    assert(afterD2 == f.batchOracle())
+    assert(afterD2.toSeq.map(_._3).sum == 5L) // events 1-5, once each
+    // No new files: the refresh runs no batch and leaves the table as is.
+    f.refresh()
+    assert(f.table() == afterD2)
+    // Drop 3 carries a row at 09:40, behind the 10:00 watermark that
+    // drop 2 reached. Late rows are cut at the watermark the previous
+    // refresh started with (09:10, from drop 1), so it still counts.
+    f.drop("d3", Seq((6L, "2024-01-01 13:30:00", 1L, "view", 2.5),
+      (7L, "2024-01-01 14:15:00", 3L, "buy", 1.0),
+      (8L, "2024-01-01 09:40:00", 2L, "view", 3.0)))
+    f.refresh()
+    val end = f.table()
+    assert(end == f.batchOracle(), s"serving $end, batch ${f.batchOracle()}")
+    assert(end.contains(("2024-01-01 09:00:00.0", "silver", 1L, 3000000L)))
+    assert(end.toSeq.map(_._3).sum == 8L)
   }
 
   test("streaming ingest dedup: incremental verdicts, decision equals batch replay") {

@@ -141,6 +141,50 @@ class FunctionsSpec extends SparkSpec {
     assert(row.isNullAt(1))
   }
 
+  test("cosine_similarity equals the SQL formulation on zero, empty and NULL-element vectors") {
+    GraftFunctions.ensureRegistered(spark)
+    import spark.implicits._
+    def dot(a: String, b: String) =
+      s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    val cosSql = s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))"
+    val pairs = Seq[(Seq[java.lang.Double], Seq[java.lang.Double])](
+      (Seq(1.0, 2.0), Seq(2.0, 3.5)),
+      (Seq(0.0, 0.0), Seq(1.0, 2.0)), // zero norm on the left
+      (Seq(1.0, 2.0), Seq(0.0, 0.0)), // zero norm on the right
+      (Seq(0.0, 0.0), Seq(0.0, 0.0)),
+      (Seq(), Seq()), // empty: both norms zero
+      (Seq(1.0, null), Seq(1.0, 2.0)), // NULL element
+      (Seq(1.0), Seq(1.0, 2.0))) // length mismatch: native NULL only
+    // repartition keeps the projection out of LocalRelation folding, so
+    // each factory mode really evaluates the expression per row.
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("i", "a", "b").repartition(2)
+    // ANSI off: SQL division by zero is NULL there (try_divide's NULL with
+    // ANSI on, where the plain formulation throws instead).
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try {
+        val rows = df.select(col("i"), expr("cosine_similarity(a, b)"),
+            expr(cosSql)).collect().sortBy(_.getInt(0))
+        for (r <- rows) {
+          val native = if (r.isNullAt(1)) None else Some(r.getDouble(1))
+          val hof = if (r.isNullAt(2)) None else Some(r.getDouble(2))
+          assert(native.forall(!_.isNaN), s"$mode row ${r.getInt(0)}: NaN")
+          if (r.getInt(0) == 6) assert(native.isEmpty, s"$mode: mismatch not NULL")
+          else assert(native == hof, s"$mode row ${r.getInt(0)}: native $native != sql $hof")
+        }
+        assert(rows.count(_.isNullAt(1)) == 6, s"$mode: ${rows.toSeq}")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.ansi.enabled")
+      }
+    }
+  }
+
   test("TopKAggregator semantics match sort-and-take") {
     val agg = new TopKAggregator(3)
     val rows = Seq(5.0 -> 1L, 1.0 -> 2L, 9.0 -> 3L, 9.0 -> 0L, 3.0 -> 4L)

@@ -48,4 +48,27 @@ class TextClassifierSpec extends SparkSpec {
     assert(feats.filter(col("phi") === 0).isEmpty)
     assert(feats.filter(col("b") < 0 || col("b") > 64).isEmpty)
   }
+
+  test("q368: a NULL-text document keeps its bias row, fused and ftFuse=off alike") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-q368").toString
+    Seq[(Long, String, String)](
+      (1L, "spark query join spark plan", "en"),
+      (2L, null, "en"),
+      (3L, "", "de"),
+      (4L, "join the query", "de"),
+      (5L, "spark join query", "en"))
+      .toDF("doc_id", "text", "lang")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    def run(): Seq[org.apache.spark.sql.Row] =
+      graft.operators.TextAnalysis.q368.run(spark, dir).collect().toSeq
+    val fused = run()
+    val unfused =
+      try { sys.props("graft.ftFuse") = "off"; run() }
+      finally sys.props.remove("graft.ftFuse")
+    assert(fused == unfused, s"fused $fused vs ftFuse=off $unfused")
+    // round 1 starts from w = 0, so every document's margin is 0 and
+    // counts as misclassified: all 5, the NULL-text one included
+    assert(fused.head.getAs[Long]("miscls") == 5L, s"$fused")
+  }
 }
